@@ -1,19 +1,26 @@
 """Similarity search over embedding columns (driver extension surface).
 
-- ``brute_topk``   — exact cosine top-k: broadcast the query set, scan the
-                     corpus once, per-partition top-k via window rank.
-                     The correctness baseline, and at 100 TB still the
-                     right plan when |queries| is small (one corpus scan,
-                     no index build).
-- ``lsh_topk``     — random-hyperplane LSH: bucket corpus + queries by
-                     sign-bit sketch, rank only within colliding buckets
-                     (multi-probe over rotations).  The scale path when
-                     |queries| × |corpus| is too big to brute force.
-- ``ivf_topk``     — inverted-file (IVF) index: k-means centroids trained
-                     on a bounded sample, corpus partitioned by nearest
-                     centroid, queries probe the ``nprobe`` nearest lists.
-                     Data-adaptive buckets (vs LSH's data-oblivious
-                     hyperplanes) — better recall on clustered corpora.
+- ``brute_topk``      — exact cosine top-k: broadcast the query set, scan
+                        the corpus once, per-partition top-k via window
+                        rank.  The correctness baseline, and at 100 TB
+                        still the right plan when |queries| is small (one
+                        corpus scan, no index build).
+- ``lsh_topk_det``    — random-hyperplane LSH over integer-quantized
+                        vectors and planes: bucket corpus + queries by
+                        sign-bit sketch, rank only within colliding
+                        buckets.  The scale path when |queries| × |corpus|
+                        is too big to brute force.
+- ``ivf_topk_det``    — inverted-file (IVF) index: the lowest-id corpus
+                        vectors are the centroids, the corpus is
+                        partitioned by nearest centroid, queries probe
+                        the ``nprobe`` nearest lists.
+- ``neardup_pairs_lsh`` / ``semantic_dedup`` — near-duplicate pairs and
+                        SemDeDup-style pruning on the same sketches and
+                        lists; ``neardup_pairs`` is the exact O(n²)
+                        baseline tests pin them against.
+
+Every approximate operator is deterministic across engines (integer
+sketches and dots), so a SQL oracle replays it exactly.
 
 Dot products are built-in zip_with/aggregate expressions (functions.vector)
 — JVM-side, no Python per row.
@@ -36,7 +43,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from amazon_kinesis_data_analytics_flinktableapi_spark.functions.text import half_up_round
-from amazon_kinesis_data_analytics_flinktableapi_spark.functions.vector import as_double, cosine, dot, norm
+from amazon_kinesis_data_analytics_flinktableapi_spark.functions.vector import as_double, cosine, norm
+from amazon_kinesis_data_analytics_flinktableapi_spark.operators.clustering import _clean_rows
+
+
+def _topk_tail(scored: DataFrame, k: int, scale: int) -> DataFrame:
+    """(q_id, c_id, __sim) → ranked top-k with the shared output contract."""
+    w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
+    return (
+        scored.select("q_id", "c_id", "__sim", F.row_number().over(w).alias("rn"))
+        .filter(F.col("rn") <= k)
+        .select("q_id", "c_id", half_up_round(F.col("__sim"), scale).alias("cos_sim"), "rn")
+    )
 
 
 def brute_topk(
@@ -59,144 +77,7 @@ def brute_topk(
         c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id", cosine("q_vec", "c_vec").alias("__sim"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
-    return (
-        scored.select("q_id", "c_id", "__sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id", half_up_round(F.col("__sim"), scale).alias("cos_sim"), "rn")
-    )
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int = 13) -> list[list[float]]:
-    rng = np.random.RandomState(seed)
-    return rng.randn(n_planes, dim).tolist()
-
-
-def _lit_darray(vals) -> "F.Column":
-    """Double-array literal built in ONE py4j call.  ``F.array(*[F.lit(x)
-    ...])`` costs two gateway round-trips per element — a 64-dim plane set
-    spends seconds in pure plan construction before Spark sees the query.
-    ``repr(float)`` is shortest-round-trip, so Java's parseDouble recovers
-    the identical IEEE double."""
-    return F.expr("array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")")
-
-
-def sketch_expr(vec_col: str, planes: list[list[float]]):
-    """Sign-bit LSH sketch of a vector column as a long (one bit per plane)."""
-    v = as_double(vec_col)
-    bits = []
-    for i, p in enumerate(planes):
-        plane = _lit_darray(p)
-        d = F.aggregate(F.zip_with(v, plane, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-        bits.append(F.when(d >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int | None = None,
-    n_tables: int = 4,
-    seed: int = 13,
-    scale: int = 6,
-    multi_probe: bool = False,
-) -> DataFrame:
-    """Approximate top-k: rank only candidates whose sign-bit sketch
-    collides with the query in ≥1 of ``n_tables`` independent tables.
-
-    ``n_planes=None`` (default) auto-sizes from a corpus count via
-    :func:`auto_n_planes` — log2(n / 4096), clamped — so a naive caller
-    at any scale gets target-sized buckets instead of the fixture
-    default (VERDICT r12 #6).
-
-    Scale: corpus is sketched once per table (scan-bound, codegen), the
-    join is equi on (table, sketch) — shuffle ∝ corpus size × n_tables,
-    candidate ranking ∝ bucket sizes, never |corpus|×|queries|.  Recall
-    is tunable via n_planes (bucket width) and n_tables (probes); the
-    recall test in tests/test_similarity.py pins it against brute_topk.
-
-    ``multi_probe``: additionally probe, per table, every bucket at
-    Hamming distance 1 from the query's own bucket (each single plane-bit
-    flipped) — the multi-probe LSH idea (Lv et al., VLDB'07): near
-    neighbours that fall just on the other side of ONE hyperplane are
-    recovered without adding tables.  The probe fan-out lives entirely on
-    the QUERY side (×(1+n_planes) broadcast rows); the corpus is still
-    sketched exactly once per table, so corpus-side cost is unchanged —
-    the knob that buys recall on hard (uniform, unclustered) data where
-    bucket collisions are rare.
-    """
-    if n_planes is None:
-        n_planes = auto_n_planes(corpus.count())
-    tables = [(_t, _hyperplanes(dim, n_planes, seed + 101 * _t)) for _t in range(n_tables)]
-
-    def sketched(df: DataFrame, prefix: str, probe: bool) -> DataFrame:
-        parts = []
-        for t, planes in tables:
-            sk = sketch_expr(vec_col, planes)
-            if probe:
-                # materialize the sketch ONCE, then build the probe set by
-                # flipping bits of the materialized column: inlining `sk`
-                # into all 1+n_planes array slots would evaluate the
-                # interpreted n_planes-dot expression O(n_planes²) times
-                # per row (Catalyst's CollapseProject keeps the two-step
-                # projection because the alias is non-cheap and multiply-
-                # referenced)
-                base = df.select(
-                    F.col(id_col).alias(f"{prefix}_id"),
-                    F.col(vec_col).alias(f"{prefix}_vec"),
-                    F.lit(t).alias("t"),
-                    sk.alias("__sk0"),
-                )
-                sk0 = F.col("__sk0")
-                parts.append(
-                    base.select(
-                        f"{prefix}_id",
-                        f"{prefix}_vec",
-                        "t",
-                        F.explode(
-                            F.array(
-                                sk0,
-                                *[sk0.bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(len(planes))],
-                            )
-                        ).alias("sk"),
-                    )
-                )
-            else:
-                parts.append(
-                    df.select(
-                        F.col(id_col).alias(f"{prefix}_id"),
-                        F.col(vec_col).alias(f"{prefix}_vec"),
-                        F.lit(t).alias("t"),
-                        sk.alias("sk"),
-                    )
-                )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.union(p)
-        return out
-
-    cs = sketched(corpus, "c", probe=False)
-    qs = sketched(queries, "q", probe=multi_probe)
-    candidates = (
-        cs.join(F.broadcast(qs), ["t", "sk"])
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", "q_vec", "c_vec")
-        .distinct()
-    )
-    scored = candidates.select("q_id", "c_id", cosine("q_vec", "c_vec").alias("__sim"))
-    w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
-    return (
-        scored.select("q_id", "c_id", "__sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id", half_up_round(F.col("__sim"), scale).alias("cos_sim"), "rn")
-    )
+    return _topk_tail(scored, k, scale)
 
 
 def auto_n_planes(n_vectors: int, target_bucket: int = 4096, lo: int = 4, hi: int = 24) -> int:
@@ -253,275 +134,78 @@ def auto_nprobe(n_centroids: int, lo: int = 4) -> int:
     return min(n_centroids, max(lo, math.ceil(math.sqrt(max(n_centroids, 1)))))
 
 
-#: above this many centroids the per-centroid expression forest loses to
-#: one Arrow-batched matrix product — see _matrix_assign / _matrix_probes.
-#: Measured (sf0.1 embeddings, local[32], min-of-3): the matrix path wins
-#: at EVERY size above the cap — 16 centroids 1.03 s vs 1.65 s, 32: 0.84
-#: vs 3.17, 45: 0.62 vs 2.89 — because higher-order array expressions
-#: are INTERPRETED per row, not codegen'd.  r17 kept the cap at 16 so
-#: the registered 16-centroid queries stayed on the expression path
-#: ("plan stability"); r18 re-A/B'd AT the registered sizes (VERDICT r17
-#: item 6, interleaved alternating-arm min-of-4, parity-checked):
-#: ann_ivf_topk 1.39 → 0.86 s (1.62×), ann_recall_report 1.21 → 0.82
-#: (1.47×), semantic_dedup 2.90 → 2.48 (1.17×) — and a direct
-#: ivf_topk_det probe reads the crossover at n_centroids=4 (expr 0.87 vs
-#: matrix 0.89 — flat) / 8 (0.98 vs 0.85 — matrix wins).  Cap = 4:
-#: everything ≥ 5 lists takes the matrix path; plan-stability was not a
-#: perf argument and the dumps are re-committed (plans/r18).
-EXPR_CENTROID_CAP = 4
+def _lowest_id_centroids(df: DataFrame, id_col: str, vec_col: str, n_centroids: int):
+    """(ids, mat): the ``n_centroids`` lowest-id corpus vectors, quantized,
+    id-ascending — a bounded driver collect (TakeOrderedAndProject, no
+    global sort) that runs when the caller builds its DataFrame.  An
+    empty corpus gives a 0×0 table: no row is assigned or probed."""
+    rows = df.orderBy(id_col).limit(n_centroids).select(F.col(id_col), quantized(vec_col)).collect()
+    ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
+    mat = np.array([r[1] for r in rows], dtype=np.int64).reshape(len(rows), -1 if rows else 0)
+    return ids, mat
 
 
-def _matrix_assign(
-    vec_col,
-    cents: np.ndarray,
-    ids: np.ndarray | None = None,
-    null_assign: int | None = None,
-):
+def _matrix_assign(vec_col, cents: np.ndarray, ids: np.ndarray):
     """Bucket assignment as ONE Arrow-batched matrix product: argmax of
-    X @ C^T per batch.  The expression path builds n_centroids
-    interpreted higher-order dots per row — fine to ~64 centroids, but an
-    auto-sized index at 1e9 vectors wants thousands of lists, where a
-    numpy matmul over a 10k-row Arrow batch is both faster and constant
-    plan size.  The centroid matrix ships once per executor inside the
-    UDF closure (≤2 MB at the auto cap).  Ties: argmax takes the FIRST
-    (lowest-position) centroid — for the det variants, whose centroid
-    rows arrive id-ascending with exact integer dots, this IS their
-    documented ties-toward-smaller-id rule; for float k-means dots exact
-    ties are measure-zero.  ``ids`` maps matrix positions to centroid
-    ids when they differ (det variants use vec_ids, not positions);
-    integer-quantized inputs stay exact end-to-end (|dot| ≤ ~2^46 per
-    term sum, well under 2^53, and int64 @ int64 stays int64)."""
-    import pandas as pd
+    X @ C^T per batch — constant plan size out to the 4096-list auto cap
+    (a per-centroid expression forest is interpreted per row and grows
+    with the index).  The centroid matrix ships once per executor inside
+    the UDF closure (≤2 MB at the auto cap).  Ties: argmax takes the
+    FIRST (lowest-position) centroid; centroid rows arrive id-ascending
+    with exact integer dots, so this IS the ties-toward-smaller-id rule
+    (|dot| ≤ ~2^46 per term sum, well under 2^53, and int64 @ int64
+    stays int64)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def assign(v: pd.Series) -> pd.Series:
-        return pd.Series(_assign_kernel(v.to_numpy(), cents, ids, null_assign))
+        return pd.Series(_assign_kernel(v.to_numpy(), cents, ids))
 
     return assign(vec_col)
 
 
-def _assign_kernel(vals: np.ndarray, cents: np.ndarray, ids, null_assign):
+def _assign_kernel(vals: np.ndarray, cents: np.ndarray, ids: np.ndarray):
     """Per-batch body of :func:`_matrix_assign`, module-level so the
     empty-batch and NULL-handling invariants are directly unit-testable.
 
-    NULL embeddings: np.stack over a batch containing None would kill
-    the whole task (the _batch_sketches invariant, code-review r13) —
-    mask them and fill with null_assign.  The det callers pass the
-    smallest centroid id, which is EXACTLY the expression forest's
-    behavior (all-NULL dots tie, ties go to the smallest id —
-    oracle-attested on the adversarial fixture); the k-means caller
-    leaves None → NULL bucket → the row never ranks."""
-    # dtype=bool: on an EMPTY batch the comprehension infers float64
-    # and `~mask`/flatnonzero would TypeError (ADVICE r13)
-    mask = np.array([x is not None for x in vals], dtype=bool)
-    out = np.full(len(vals), null_assign, dtype=object)
-    if mask.any():
-        x = np.stack(vals[mask])
-        pos = (x @ cents.T).argmax(axis=1)
-        picked = pos if ids is None else ids[pos]
-        for j, val in zip(np.flatnonzero(mask), picked):
-            out[j] = int(val)
+    A row that is not a clean centroid-wide vector (NULL, empty, ragged
+    or with a NULL element) has a NULL dot against every centroid, and
+    the SQL rule (ORDER BY s DESC, j — NULL dots rank last) puts it in
+    the smallest-id list.  np.stack over such a batch would instead kill
+    the whole task."""
+    mask, X = _clean_rows(vals, cents.shape[1])
+    out = np.full(len(vals), ids[0] if len(ids) else 0, dtype=np.int64)
+    if X is not None:
+        out[mask] = ids[(X @ cents.T).argmax(axis=1)]
     return out
 
 
-def _matrix_probes(
-    vec_col,
-    cents: np.ndarray,
-    nprobe: int,
-    ids: np.ndarray | None = None,
-    null_probes: list[int] | None = None,
-):
+def _matrix_probes(vec_col, cents: np.ndarray, nprobe: int, ids: np.ndarray):
     """Query-side top-``nprobe`` centroid ids, same Arrow-batched matrix
     product.  Stable argsort on the negated dots ties toward the lower
-    matrix position = the lower centroid id (det ordering: s DESC, j ASC).
-    ``null_probes`` is the NULL-embedding fill — the det callers pass the
-    ``nprobe`` smallest centroid ids (the expression forest's all-NULL
-    tie order), k-means leaves None (row never probes)."""
-    import pandas as pd
+    matrix position = the lower centroid id (det ordering: s DESC, j ASC)."""
     from pyspark.sql.functions import pandas_udf
-
-    fill = None if null_probes is None else np.array(null_probes, dtype="int64")
 
     @pandas_udf("array<long>")
     def probes(v: pd.Series) -> pd.Series:
-        return pd.Series(_probes_kernel(v.to_numpy(), cents, nprobe, ids, fill))
+        return pd.Series(_probes_kernel(v.to_numpy(), cents, nprobe, ids))
 
     return probes(vec_col)
 
 
-def _probes_kernel(vals: np.ndarray, cents: np.ndarray, nprobe: int, ids, fill):
+def _probes_kernel(vals: np.ndarray, cents: np.ndarray, nprobe: int, ids: np.ndarray):
     """Per-batch body of :func:`_matrix_probes` (module-level for direct
-    unit tests; NULL-tolerance mirrors :func:`_assign_kernel`)."""
-    # dtype=bool: empty-batch inference would make ~mask a TypeError
-    mask = np.array([x is not None for x in vals], dtype=bool)
-    out = np.full(len(vals), None, dtype=object)
-    if fill is not None:
-        for j in np.flatnonzero(~mask):
-            out[j] = fill
-    if mask.any():
-        x = np.stack(vals[mask])
-        pos = np.argsort(-(x @ cents.T), axis=1, kind="stable")[:, :nprobe]
-        picked = (pos if ids is None else ids[pos]).astype("int64")
-        for j, row in zip(np.flatnonzero(mask), picked):
+    unit tests).  Rows that are not clean probe the ``nprobe`` smallest
+    ids — the all-NULL-dot order of :func:`_assign_kernel`."""
+    mask, X = _clean_rows(vals, cents.shape[1])
+    out = np.empty(len(vals), dtype=object)
+    for j in np.flatnonzero(~mask):
+        out[j] = ids[:nprobe]
+    if X is not None:
+        pos = np.argsort(-(X @ cents.T), axis=1, kind="stable")[:, :nprobe]
+        for j, row in zip(np.flatnonzero(mask), ids[pos]):
             out[j] = row
     return out
-
-
-def _kmeans_centroids(sample: np.ndarray, n_centroids: int, seed: int, iters: int = 12) -> np.ndarray:
-    """Lloyd's k-means on a driver-side sample, L2-normalized output.
-
-    The sample is bounded (``train_limit`` rows), so this is O(sample ×
-    centroids × iters) on the driver — the standard IVF build: at 100 TB
-    the index is still trained on a fixed-size sample, never the corpus.
-    """
-    rng = np.random.RandomState(seed)
-    cents = sample[rng.choice(len(sample), size=min(n_centroids, len(sample)), replace=False)].copy()
-    for _ in range(iters):
-        # cosine assignment: normalize rows, nearest = max dot
-        cn = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-        assign = (sample @ cn.T).argmax(axis=1)
-        for j in range(len(cents)):
-            members = sample[assign == j]
-            if len(members):
-                cents[j] = members.mean(axis=0)
-    return cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-
-
-def _centroid_sims(vec_col: str, cents: np.ndarray) -> list:
-    """One (dot-product, centroid-id) struct per centroid — ranking by the
-    struct ranks by similarity (struct comparison is field-ordered)."""
-    v = as_double(vec_col)
-    out = []
-    for j, c in enumerate(cents):
-        plane = _lit_darray(c)
-        d = F.aggregate(F.zip_with(v, plane, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-        out.append(F.struct(d.alias("s"), F.lit(j).alias("j")))
-    return out
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int | None = None,
-    nprobe: int | None = None,
-    train_limit: int | None = None,
-    seed: int = 13,
-    scale: int = 6,
-) -> DataFrame:
-    """Approximate top-k via an inverted-file index: (q_id, c_id, cos_sim, rn).
-
-    Scale: train on a bounded sample (driver-side, O(train_limit)); assign
-    each corpus vector to its nearest centroid (one scan, no shuffle);
-    queries probe their ``nprobe`` nearest lists and the candidate join is
-    equi on the centroid id — shuffle ∝ |corpus| + |probed buckets|, never
-    |corpus|×|queries|.  Recall/cost dial: nprobe/n_centroids.  Vectors
-    with zero norm never rank above a real match (dot = 0).
-
-    ``n_centroids=None`` (default) auto-sizes the index from a corpus
-    count via :func:`auto_n_centroids` (≈√n, clamped) — VERDICT r12 #6:
-    a naive caller at 1e9 vectors previously got the fixture-scale 16
-    lists and quadratic intra-list pair work.  Auto sizing costs one
-    ``corpus.count()`` (metadata-cheap on parquet).  Assignment strategy
-    switches with index size: ≤``EXPR_CENTROID_CAP`` lists use the
-    broadcast-literal expression forest; above it, one Arrow-batched
-    matrix product per batch (:func:`_matrix_assign`) — higher-order
-    array expressions are interpreted per row, so the matrix path is
-    3-5× faster from ~32 lists up (measured numbers at the cap's
-    definition) and constant plan size out to the 4096-list cap.
-    """
-    n_rows: int | None = None
-    if n_centroids is None:
-        # one corpus.count() — metadata-cheap on a parquet scan, but a
-        # DERIVED input re-executes its full lineage here and again at
-        # query run (ADVICE r13): callers with expensive lineage should
-        # cache the input or pass explicit sizes
-        n_rows = corpus.count()
-        n_centroids = auto_n_centroids(n_rows)
-    if nprobe is None:
-        # √lists rule (VERDICT r13 #1) — holds recall ~flat across corpus
-        # decades where a fixed width decays; see auto_nprobe
-        nprobe = auto_nprobe(n_centroids)
-    if train_limit is None:
-        # k-means needs a multiple of n_centroids samples to place lists
-        # meaningfully; 8× is the cheapest ratio that kept recall flat in
-        # the auto-sizing tests (still bounded: ≤32k rows at the auto cap)
-        train_limit = max(4096, 8 * n_centroids)
-    # Train on a seeded RANDOM sample, not the corpus head (r14): limit()
-    # takes whatever rows the first partitions yield, so any corpus whose
-    # layout is correlated with content (time-partitioned, per-source
-    # files — i.e. every real 100 TB corpus) would train centroids on one
-    # region of the space and scatter the rest across ill-fitting lists —
-    # the classic IVF build mistake the FAISS docs warn about.  (Measured
-    # recall-neutral on the driver fixture, whose id-ordered layout is
-    # uncorrelated with content; the fix targets layout-correlated
-    # corpora.)  sample() is scan-local (no shuffle) and the Bernoulli draw
-    # is seed-deterministic per row for a fixed partition layout.  The
-    # fraction is EXACT (train_limit/n, no oversample): an oversampled
-    # fraction + limit() re-introduces head bias, because limit() fills
-    # from the first partitions — the sample lands a few % short of
-    # train_limit instead, which k-means is indifferent to.
-    base = corpus.select(as_double(vec_col))
-    if n_rows is None:
-        n_rows = base.count()
-    frac = min(1.0, train_limit / max(n_rows, 1))
-    sample = np.array(
-        [r[0] for r in base.sample(False, frac, seed).limit(train_limit).collect()],
-        dtype=np.float64,
-    )
-    if sample.size == 0 and frac < 1.0:
-        # pathological sampling miss (tiny corpus + tiny fraction can
-        # only happen with an explicit train_limit far below the corpus
-        # size) — fall back to the head rather than failing the build
-        sample = np.array(
-            [r[0] for r in base.limit(train_limit).collect()], dtype=np.float64
-        )
-    if sample.size == 0:
-        # an empty training sample would surface as an opaque numpy
-        # AxisError inside _kmeans_centroids; name the actual problem
-        raise ValueError("ivf_topk: corpus has no embeddings to train the index on")
-    cents = _kmeans_centroids(sample, n_centroids, seed)
-
-    use_matrix = len(cents) > EXPR_CENTROID_CAP
-    # corpus side: argmax centroid = max (sim, j) struct / matrix argmax
-    assign = (
-        _matrix_assign(as_double(vec_col), cents)
-        if use_matrix
-        else F.array_max(F.array(*_centroid_sims(vec_col, cents))).getField("j")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        assign.alias("bucket"),
-    )
-    # query side: top-nprobe centroids, exploded to one probe row each
-    probes = (
-        _matrix_probes(as_double(vec_col), cents, nprobe)
-        if use_matrix
-        else F.transform(
-            F.slice(F.sort_array(F.array(*_centroid_sims(vec_col, cents)), asc=False), 1, nprobe),
-            lambda s: s.getField("j"),
-        )
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(probes).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", cosine("q_vec", "c_vec").alias("__sim"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
-    return (
-        scored.select("q_id", "c_id", "__sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id", half_up_round(F.col("__sim"), scale).alias("cos_sim"), "rn")
-    )
 
 
 def neardup_pairs(
@@ -656,27 +340,6 @@ def quantized_sketches_all(qv_col: str, tables: list[list[list[int]]]) -> "F.Col
     return _sketches(F.col(qv_col))
 
 
-def _int_dot(qv_col: str, coeffs_ints: list[int]) -> "F.Column":
-    """Integer dot of a quantized vector column against literal integer
-    coefficients — exact (< 2⁵³) on any engine, same as the sketch dots."""
-    coeffs = F.expr("array(" + ",".join(f"{int(c)}L" for c in coeffs_ints) + ")")
-    return F.aggregate(
-        F.zip_with(F.col(qv_col), coeffs, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-
-
-def _topk_tail(scored: DataFrame, k: int, scale: int) -> DataFrame:
-    """(q_id, c_id, __sim) → ranked top-k with the shared output contract."""
-    w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
-    return (
-        scored.select("q_id", "c_id", "__sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id", half_up_round(F.col("__sim"), scale).alias("cos_sim"), "rn")
-    )
-
-
 def lsh_topk_det(
     corpus: DataFrame,
     queries: DataFrame,
@@ -689,10 +352,11 @@ def lsh_topk_det(
     seed: int = 13,
     scale: int = 6,
 ) -> DataFrame:
-    """Deterministic LSH top-k: same plan shape as :func:`lsh_topk` (equi
-    join on (table, sketch), candidate-only ranking) but with
-    integer-quantized vectors and hyperplanes, so the buckets — and hence
-    the approximate result — are bit-identical on any engine and a SQL
+    """Deterministic LSH top-k: rank only candidates whose sign-bit
+    sketch collides with the query in ≥1 of ``n_tables`` tables (equi
+    join on (table, sketch), candidate-only ranking).  Vectors and
+    hyperplanes are integer-quantized, so the buckets — and hence the
+    approximate result — are bit-identical on any engine and a SQL
     oracle can hash-check the whole query (``queries/llm._ann_lsh_oracle``
     is the generated DuckDB twin).  Scale properties are unchanged:
     shuffle ∝ corpus × n_tables, never |corpus| × |queries|.
@@ -759,69 +423,34 @@ def ivf_topk_det(
     nprobe: int | None = None,
     scale: int = 6,
 ) -> DataFrame:
-    """Deterministic IVF top-k: the oracle-checkable sibling of
-    :func:`ivf_topk`.  Centroids are the ``n_centroids`` lowest-id corpus
-    vectors (TakeOrderedAndProject — a bounded driver collect, no global
-    sort) instead of sampled k-means, and list assignment/probing uses
-    exact integer-quantized dot products with ties broken toward the
-    smaller centroid id — every step reproducible by a SQL twin
+    """Deterministic IVF top-k: (q_id, c_id, cos_sim, rn).  Centroids are
+    the ``n_centroids`` lowest-id corpus vectors (TakeOrderedAndProject —
+    a bounded driver collect that runs when this DataFrame is built, no
+    global sort) instead of sampled k-means, and list assignment/probing
+    uses exact integer-quantized dot products with ties broken toward
+    the smaller centroid id — every step reproducible by a SQL twin
     (``queries/llm._ann_ivf_oracle``).  The plan shape IS the production
-    IVF plan: one corpus scan to assign buckets (broadcast-literal
-    centroid expressions, codegen, no shuffle), queries probe their
-    ``nprobe`` best lists, candidate join equi on the bucket id.  Use
-    :func:`ivf_topk` (k-means-trained, recall-pinned in tests) when index
-    quality matters more than cross-engine determinism.
+    IVF plan: one corpus scan to assign buckets (one Arrow-batched int64
+    matrix product per batch, no shuffle), queries probe their
+    ``nprobe`` best lists, candidate join equi on the bucket id.
+    Quantized dots are integers < 2^53 computed as int64 @ int64, and
+    first-wins argmax / stable argsort ARE the ties-toward-smaller-id
+    rule (centroid rows arrive id-ascending).  Rows that are NULL,
+    ragged or carry a NULL element go to the smallest-id list(s), the
+    SQL rule for all-NULL dots.  An empty corpus returns no rows.
 
     ``n_centroids=None`` auto-sizes (:func:`auto_n_centroids`; an
     oracle-twinned caller passes the same explicit value to the oracle
-    generator).  Above ``EXPR_CENTROID_CAP`` the per-centroid expression
-    forest is replaced by the Arrow-batched matrix product — still
-    exactly deterministic: quantized dots are integers < 2^53 computed
-    as int64 @ int64, and first-wins argmax / stable argsort ARE the
-    ties-toward-smaller-id rule (centroid rows arrive id-ascending)."""
+    generator)."""
     if n_centroids is None:
         n_centroids = auto_n_centroids(corpus.count())
     if nprobe is None:
-        # same √lists default as ivf_topk (VERDICT r13 #1); an
-        # oracle-twinned caller passes the explicit value to both sides
+        # √lists default (VERDICT r13 #1); an oracle-twinned caller
+        # passes the explicit value to both sides
         nprobe = auto_nprobe(n_centroids)
-    cents = (
-        corpus.orderBy(id_col)
-        .limit(n_centroids)
-        .select(F.col(id_col).alias("j"), quantized(vec_col).alias("cqv"))
-        .collect()
-    )
-    # both strategies produce an assign expression and a probes expression
-    # over the quantized "qv" column; everything downstream (bucket join,
-    # self-pair filter, exact-cosine scoring, top-k tail) is shared — a
-    # fix to the tail applies to both paths by construction
-    if len(cents) > EXPR_CENTROID_CAP:
-        cmat = np.array([r["cqv"] for r in cents], dtype=np.int64)
-        cids = np.array([int(r["j"]) for r in cents], dtype=np.int64)
-        # null fills = the expression forest's all-NULL-dot tie behavior
-        # (centroid rows are id-ascending), so strategy equality holds
-        # even for NULL-embedding rows
-        assign = _matrix_assign(F.col("qv"), cmat, cids, null_assign=int(cids[0]))
-        probes = _matrix_probes(
-            F.col("qv"), cmat, nprobe, cids, null_probes=[int(x) for x in cids[:nprobe]]
-        )
-    else:
-        # struct(dot, -j): array_max picks the highest dot, ties toward the
-        # SMALLER centroid id (max of -j) — mirrored by the oracle's
-        # ORDER BY s DESC, j ASC
-        cdots = [
-            F.struct(
-                _int_dot("qv", r["cqv"]).alias("s"),
-                F.lit(-int(r["j"])).cast("long").alias("nj"),
-            )
-            for r in cents
-        ]
-        assign = -F.array_max(F.array(*cdots)).getField("nj")
-        probes = F.transform(
-            F.slice(F.sort_array(F.array(*cdots), asc=False), 1, nprobe),
-            lambda s: -s.getField("nj"),
-        )
-
+    cids, cmat = _lowest_id_centroids(corpus, id_col, vec_col, n_centroids)
+    assign = _matrix_assign(F.col("qv"), cmat, cids)
+    probes = _matrix_probes(F.col("qv"), cmat, nprobe, cids)
     c = corpus.select(
         F.col(id_col).alias("c_id"), as_double(vec_col).alias("c_vec"), quantized(vec_col).alias("qv")
     ).select("c_id", "c_vec", assign.alias("bucket"))
@@ -979,8 +608,8 @@ def semantic_dedup(
     dots, ties toward the smaller centroid id) and the drop rule uses exact
     double cosine with the id order as priority — no RNG, no k-means.
 
-    Scale shape: centroid assignment rides the corpus scan (broadcast
-    literal centroids, no shuffle); candidate pairs are generated ONLY
+    Scale shape: centroid assignment rides the corpus scan (one matrix
+    product per Arrow batch, no shuffle); candidate pairs are generated ONLY
     within a cluster via an ids+vectors equi self-join on the cluster id
     (pair work ∝ Σ cluster² — n_centroids grows with the corpus exactly
     like ivf lists); the drop set distincts ids only, and the final filter
@@ -988,33 +617,17 @@ def semantic_dedup(
 
     ``n_centroids=None`` auto-sizes (:func:`auto_n_centroids`, ≈√n) —
     SemDeDup's pair work is Σ cluster², so cluster count MUST grow with
-    the corpus; above ``EXPR_CENTROID_CAP`` assignment switches to the
-    exactly-deterministic Arrow matrix product (see :func:`ivf_topk_det`).
+    the corpus.  Assignment is the exactly-deterministic Arrow matrix
+    product of :func:`ivf_topk_det`; the centroid collect runs when this
+    DataFrame is built, and an empty corpus returns no rows.
     """
     if n_centroids is None:
         n_centroids = auto_n_centroids(df.count())
-    cents = (
-        df.orderBy(id_col)
-        .limit(n_centroids)
-        .select(F.col(id_col).alias("j"), quantized(vec_col).alias("cqv"))
-        .collect()
-    )
-    if len(cents) > EXPR_CENTROID_CAP:
-        cmat = np.array([r["cqv"] for r in cents], dtype=np.int64)
-        cids = np.array([int(r["j"]) for r in cents], dtype=np.int64)
-        # NULL embeddings land in the smallest-id cluster, exactly like
-        # the expression forest's all-NULL tie (oracle-attested); they can
-        # never form a candidate pair (cosine(NULL, x) filters out)
-        cluster = _matrix_assign(F.col("qv"), cmat, cids, null_assign=int(cids[0]))
-    else:
-        cdots = [
-            F.struct(
-                _int_dot("qv", r["cqv"]).alias("s"),
-                F.lit(-int(r["j"])).cast("long").alias("nj"),
-            )
-            for r in cents
-        ]
-        cluster = -F.array_max(F.array(*cdots)).getField("nj")
+    cids, cmat = _lowest_id_centroids(df, id_col, vec_col, n_centroids)
+    # NULL embeddings land in the smallest-id cluster (the SQL rule for
+    # all-NULL dots); they never form a candidate pair (cosine(NULL, x)
+    # filters out)
+    cluster = _matrix_assign(F.col("qv"), cmat, cids)
     base = (
         df.select(F.col(id_col).alias("id"), as_double(vec_col).alias("vd"), quantized(vec_col).alias("qv"))
         .select("id", "vd", cluster.alias("cluster"))

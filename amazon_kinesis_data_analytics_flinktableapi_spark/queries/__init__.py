@@ -167,7 +167,7 @@ _PRIORITY: list[str] = [
     #   7-10  the four r12-stale names capacity-deferred by the r17 window,
     #   11-25 every query whose execution path this round's optimization
     #         changes touched (clustering Arrow kernels: kmeans/PQ/RQ/IVFPQ
-    #         family; EXPR_CENTROID_CAP 16→4: ann_ivf_topk, semantic_dedup,
+    #         family; IVF expression-forest cap 16→4: ann_ivf_topk, semantic_dedup,
     #         ann_recall_report; selection-operator materialize knob:
     #         grouped_median/percentiles, rfm_segmentation; pin() knob:
     #         pagerank_dup_graph, prefix_filter_setjoin),

@@ -1817,8 +1817,8 @@ def _ann_ivf_oracle(k: int = 10, n_centroids: int = 16, nprobe: int = 4,
     oracle=nse_oracle(_ann_ivf_oracle()),
     doc="IVF approximate cosine top-k — deterministic lowest-id centroids "
     "+ integer-quantized assignment make the inverted-file partitioning "
-    "oracle-hash-checkable; the k-means-trained ivf_topk stays the "
-    "production index build (recall pinned in tests/test_similarity.py)",
+    "oracle-hash-checkable; list assignment and probing are one Arrow "
+    "matrix product per batch (recall pinned in tests/test_similarity.py)",
 )
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emb,) = load(spark, sf_dir, "embeddings")

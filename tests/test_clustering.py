@@ -24,6 +24,7 @@ from amazon_kinesis_data_analytics_flinktableapi_spark.operators.clustering impo
     pq_encode,
 )
 from amazon_kinesis_data_analytics_flinktableapi_spark.queries import REGISTRY
+from tests import golden_ops
 
 QUANT = 1_000_000
 
@@ -154,6 +155,27 @@ def test_kmeans_k_exceeding_corpus(spark):
     got = {r["vec_id"]: (r["cluster"], r["dist_q"])
            for r in kmeans_lloyd(_emb_df(spark, vecs), k=8, n_iters=2).collect()}
     assert got == {0: (0, 0), 1: (1, 0)}
+
+
+_CLUSTERING_GOLDEN = [
+    c for c in golden_ops.cases() if c[1] not in ("ivf_topk_det", "semantic_dedup")
+]
+
+
+@pytest.mark.parametrize(
+    "fixture,op", _CLUSTERING_GOLDEN, ids=[golden_ops.case_id(*c) for c in _CLUSTERING_GOLDEN]
+)
+def test_clustering_golden_rows(spark, fixture, op):
+    """The Arrow kernels reproduce the rows the crossJoin + row_number
+    fallback produced on hostile codebooks and corpora: ragged,
+    NULL-element, empty and NULL vectors in the tail, in the head (the
+    codebook rows themselves), mixed into the head, and the empty corpus
+    (tests/golden_ops.py).  Mismatched or NULL-element pairs score
+    distance/dot 0, ties go to the smallest code id."""
+    df = golden_ops.cases()[(fixture, op)](golden_ops.FIXTURES[fixture](spark))
+    want = golden_ops.load_golden()[golden_ops.case_id(fixture, op)]
+    assert df.columns == want["columns"]
+    assert golden_ops.rows_of(df) == want["rows"]
 
 
 def test_clustering_validation():

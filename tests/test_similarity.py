@@ -1,4 +1,5 @@
-"""Similarity-search operator tests: brute-force exactness + LSH recall."""
+"""Similarity-search operator tests: brute-force exactness, LSH/IVF recall,
+NULL tolerance and golden rows for the IVF pair."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, IntegerType, LongType, StructField, StructType
 
 from amazon_kinesis_data_analytics_flinktableapi_spark.operators import similarity as S
+from tests import golden_ops
 
 DIM = 16
 SCHEMA = StructType([StructField("vec_id", LongType()), StructField("embedding", ArrayType(FloatType()))])
@@ -62,38 +64,6 @@ def test_brute_topk_cosine_values(vectors):
         assert math.isclose(r.cos_sim, expect, abs_tol=1e-5)
 
 
-def test_lsh_topk_recall(vectors):
-    queries = vectors.filter(F.col("vec_id") < 10)
-    brute = S.brute_topk(vectors, queries, k=10)
-    lsh = S.lsh_topk(vectors, queries, k=10, dim=DIM, n_planes=6, n_tables=8)
-    bset = {(r.q_id, r.c_id) for r in brute.collect()}
-    lset = {(r.q_id, r.c_id) for r in lsh.collect()}
-    recall = len(bset & lset) / len(bset)
-    assert recall >= 0.6, f"LSH recall@10 too low: {recall}"
-
-
-def test_ivf_topk_recall(vectors):
-    queries = vectors.filter(F.col("vec_id") < 10)
-    brute = S.brute_topk(vectors, queries, k=10)
-    ivf = S.ivf_topk(vectors, queries, k=10, n_centroids=10, nprobe=3)
-    bset = {(r.q_id, r.c_id) for r in brute.collect()}
-    iset = {(r.q_id, r.c_id) for r in ivf.collect()}
-    recall = len(bset & iset) / len(bset)
-    # clustered fixture: each query's true neighbours live in its own
-    # cluster, which IVF's data-adaptive centroids should isolate
-    assert recall >= 0.8, f"IVF recall@10 too low: {recall}"
-
-
-def test_ivf_topk_values_exact_within_probed(vectors):
-    # scores it does return must be the exact cosine (verification is exact)
-    out = S.ivf_topk(vectors, vectors.filter(F.col("vec_id") == 0), k=5, n_centroids=10, nprobe=3)
-    rows = dict((r.vec_id, np.array(r.embedding)) for r in vectors.collect())
-    for r in out.collect():
-        q, c = rows[0], rows[r.c_id]
-        expect = float(q @ c / (np.linalg.norm(q) * np.linalg.norm(c)))
-        assert math.isclose(r.cos_sim, expect, abs_tol=1e-5)
-
-
 def test_neardup_pairs_threshold(vectors):
     out = S.neardup_pairs(vectors, threshold=0.9, id_col="vec_id", vec_col="embedding")
     rows = dict((r.vec_id, np.array(r.embedding)) for r in vectors.collect())
@@ -133,25 +103,6 @@ def test_neardup_pairs_lsh_no_nested_loop(vectors):
     # equi-join on (table, sketch) — no cartesian/nested-loop join anywhere
     plan = S.neardup_pairs_lsh(vectors, threshold=0.9, dim=DIM)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
-
-
-def test_lsh_multi_probe_recall_on_uniform(spark):
-    """Uniform (unclustered) embeddings are LSH's hard case — bucket
-    collisions are rare and single-probe recall collapses.  Multi-probe
-    (every Hamming-1 neighbour bucket probed on the query side) must
-    recover most of the true top-k without touching corpus-side cost.
-    Measured on this fixture: 0.33 single-probe vs 0.83 multi-probe."""
-    rng = np.random.RandomState(7)
-    rows = [(i, [float(x) for x in rng.randn(DIM)]) for i in range(400)]
-    vectors = spark.createDataFrame(rows, SCHEMA)
-    queries = vectors.filter(F.col("vec_id") < 10)
-    brute = {(r.q_id, r.c_id) for r in S.brute_topk(vectors, queries, k=10).collect()}
-    single = S.lsh_topk(vectors, queries, k=10, dim=DIM, n_planes=6, n_tables=8)
-    multi = S.lsh_topk(vectors, queries, k=10, dim=DIM, n_planes=6, n_tables=8, multi_probe=True)
-    r_single = len(brute & {(r.q_id, r.c_id) for r in single.collect()}) / len(brute)
-    r_multi = len(brute & {(r.q_id, r.c_id) for r in multi.collect()}) / len(brute)
-    assert r_multi >= 0.7, f"multi-probe recall too low on uniform data: {r_multi}"
-    assert r_multi > r_single, f"multi-probe ({r_multi}) should beat single-probe ({r_single})"
 
 
 def test_lsh_topk_det_recall_and_values(vectors):
@@ -306,21 +257,23 @@ def test_auto_nprobe_rule_two_corpus_sizes():
 def test_matrix_kernels_empty_batch_and_nulls():
     """ADVICE r13: an empty Arrow batch made the None-mask comprehension
     infer dtype float64, so `~mask` raised TypeError inside the task.
-    The kernels are module-level now — pin empty, all-NULL, and mixed
-    batches directly."""
-    cents = np.array([[1.0, 0.0], [0.0, 1.0]])
+    The kernels are module-level — pin empty, all-NULL, and mixed
+    batches directly.  Rows that are not clean centroid-wide vectors
+    (NULL, ragged, NULL element) take the smallest id(s)."""
+    cents = np.array([[1, 0], [0, 1]], dtype=np.int64)
     ids = np.array([7, 9], dtype=np.int64)
     empty = np.array([], dtype=object)
-    assert list(S._assign_kernel(empty, cents, None, None)) == []
-    assert list(S._probes_kernel(empty, cents, 2, None, None)) == []
+    assert list(S._assign_kernel(empty, cents, ids)) == []
+    assert list(S._probes_kernel(empty, cents, 2, ids)) == []
     allnull = np.array([None, None], dtype=object)
-    assert list(S._assign_kernel(allnull, cents, ids, 7)) == [7, 7]
-    fills = np.array([7, 9], dtype=np.int64)
-    probed = S._probes_kernel(allnull, cents, 2, ids, fills)
+    assert list(S._assign_kernel(allnull, cents, ids)) == [7, 7]
+    probed = S._probes_kernel(allnull, cents, 2, ids)
     assert [list(p) for p in probed] == [[7, 9], [7, 9]]
-    mixed = np.array([None, np.array([2.0, 1.0])], dtype=object)
-    got = S._assign_kernel(mixed, cents, ids, None)
-    assert got[0] is None and got[1] == 7  # argmax dot -> first centroid (id 7)
+    mixed = np.array(
+        [None, np.array([1, 2]), np.array([5]), np.array([np.nan, 3.0])], dtype=object
+    )
+    assert list(S._assign_kernel(mixed, cents, ids)) == [7, 9, 7, 7]
+    assert [list(p) for p in S._probes_kernel(mixed, cents, 1, ids)] == [[7], [9], [7], [7]]
 
 
 def _make_clusters(spark, n, seed):
@@ -332,40 +285,6 @@ def _make_clusters(spark, n, seed):
         for i in range(n)
     ]
     return spark.createDataFrame(rows, SCHEMA)
-
-
-@pytest.mark.parametrize("n", [200, 800])
-def test_lsh_topk_autosized_recall_two_corpus_sizes(spark, n):
-    """Recall of the AUTO-SIZED path pinned at two corpus sizes
-    (VERDICT r12 #6 'test pinning recall at two corpus sizes'): a naive
-    caller passing no sizing params gets a working index at either
-    scale.  n_tables raised where auto planes exceed the fixture default
-    density (recall is a planes/tables trade — auto sizes planes for
-    bucket COST; the caller still owns the recall dial)."""
-    vectors = _make_clusters(spark, n, seed=7)
-    queries = vectors.filter(F.col("vec_id") < 10)
-    brute = {(r.q_id, r.c_id) for r in S.brute_topk(vectors, queries, k=10).collect()}
-    lsh = {
-        (r.q_id, r.c_id)
-        for r in S.lsh_topk(vectors, queries, k=10, dim=DIM, n_tables=8).collect()
-    }
-    assert len(lsh & brute) / len(brute) >= 0.6, f"auto-sized recall floor at n={n}"
-
-
-def test_ivf_topk_autosized_recall_two_corpus_sizes(spark):
-    """Same pin for auto-sized IVF (n_centroids=None -> sqrt rule), now
-    FULLY auto: nprobe also defaults (None -> auto_nprobe sqrt-of-lists,
-    VERDICT r13 #1), so this pins the naive caller's end-to-end recall
-    at two corpus sizes with zero tuning parameters."""
-    for n in (200, 800):
-        vectors = _make_clusters(spark, n, seed=11)
-        queries = vectors.filter(F.col("vec_id") < 10)
-        brute = {(r.q_id, r.c_id) for r in S.brute_topk(vectors, queries, k=10).collect()}
-        ivf = {
-            (r.q_id, r.c_id)
-            for r in S.ivf_topk(vectors, queries, k=10).collect()
-        }
-        assert len(ivf & brute) / len(brute) >= 0.6, f"auto-sized IVF recall floor at n={n}"
 
 
 def test_pq_adc_autosized_recall_two_corpus_sizes(spark):
@@ -396,45 +315,6 @@ def test_pq_adc_autosized_recall_two_corpus_sizes(spark):
     assert abs(recalls[200] - recalls[800]) <= 0.15, (
         f"ADC recall drifted across the 4x corpus growth: {recalls}"
     )
-
-
-def test_ivf_topk_det_matrix_path_equals_expression_path(vectors):
-    """Above EXPR_CENTROID_CAP the det variant switches to the Arrow
-    matrix product; determinism demands the two strategies agree EXACTLY
-    (integer dots < 2^53, first-wins argmax == ties-toward-smaller-id).
-    Forcing n_centroids just past the cap on the same corpus must
-    reproduce the expression path's output bit-for-bit."""
-    queries = vectors.filter(F.col("vec_id") < 5)
-    n = S.EXPR_CENTROID_CAP + 8
-    expr_cap = S.EXPR_CENTROID_CAP
-    try:
-        S.EXPR_CENTROID_CAP = 10**9  # force expression path at n centroids
-        a = sorted(
-            (r.q_id, r.c_id, r.cos_sim, r.rn)
-            for r in S.ivf_topk_det(vectors, queries, k=10, n_centroids=n, nprobe=3).collect()
-        )
-    finally:
-        S.EXPR_CENTROID_CAP = expr_cap
-    b = sorted(
-        (r.q_id, r.c_id, r.cos_sim, r.rn)
-        for r in S.ivf_topk_det(vectors, queries, k=10, n_centroids=n, nprobe=3).collect()
-    )
-    assert a == b and len(b) > 0
-
-
-def test_semantic_dedup_matrix_path_equals_expression_path(spark):
-    from amazon_kinesis_data_analytics_flinktableapi_spark.operators.similarity import semantic_dedup
-
-    vectors = _make_clusters(spark, 300, seed=23)
-    n = S.EXPR_CENTROID_CAP + 8
-    expr_cap = S.EXPR_CENTROID_CAP
-    try:
-        S.EXPR_CENTROID_CAP = 10**9
-        a = sorted((r.vec_id, r.cluster) for r in semantic_dedup(vectors, n_centroids=n).collect())
-    finally:
-        S.EXPR_CENTROID_CAP = expr_cap
-    b = sorted((r.vec_id, r.cluster) for r in semantic_dedup(vectors, n_centroids=n).collect())
-    assert a == b and len(b) > 0
 
 
 def test_ann_int8_topk_overlap_vs_exact_dot(spark):
@@ -468,3 +348,60 @@ def test_ann_int8_topk_overlap_vs_exact_dot(spark):
         )
         exact = {c for _, c in scores[:10]}
         assert len(cand & exact) / len(exact) >= 0.8, f"int8 top-10 drifted for q={q}"
+
+
+
+def _vectors_with_null(spark, n=120, dim=8):
+    rng = np.random.RandomState(3)
+    rows = [(i, [float(x) for x in rng.randn(dim)]) for i in range(n)]
+    rows.append((n, None))  # the hostile row
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+def test_matrix_path_tolerates_null_embeddings(spark):
+    """np.stack over a batch containing None once killed the task.  NULL
+    rows must land in the smallest-id list — query completes, the NULL
+    id never appears as a neighbour, and in semantic_dedup the NULL row
+    survives in cluster 0 (it can never join a candidate pair)."""
+    vecs = _vectors_with_null(spark)
+    queries = vecs.filter(F.col("vec_id") < 3)
+    out = S.ivf_topk_det(vecs, queries, k=5, n_centroids=12, nprobe=3).collect()
+    assert out and all(r.c_id != 120 and r.q_id != 120 for r in out)
+    kept = sorted((r.vec_id, r.cluster) for r in
+                  S.semantic_dedup(vecs, threshold=0.99, n_centroids=12).collect())
+    assert (120, 0) in kept
+
+
+_IVF_GOLDEN = [c for c in golden_ops.cases() if c[1] in ("ivf_topk_det", "semantic_dedup")]
+
+
+@pytest.mark.parametrize("fixture,op", _IVF_GOLDEN, ids=[golden_ops.case_id(*c) for c in _IVF_GOLDEN])
+def test_ivf_golden_rows(spark, fixture, op):
+    """The single matrix path reproduces the rows the per-centroid
+    expression forest produced at 3 lists — on a clean corpus with a
+    NULL vector, and on a tail carrying ragged, NULL-element, empty and
+    NULL vectors (tests/golden_ops.py)."""
+    df = golden_ops.cases()[(fixture, op)](golden_ops.FIXTURES[fixture](spark))
+    want = golden_ops.load_golden()[golden_ops.case_id(fixture, op)]
+    assert df.columns == want["columns"]
+    assert golden_ops.rows_of(df) == want["rows"]
+
+
+def test_empty_corpus_gives_empty_result(spark):
+    """Empty in → empty out for every codebook operator: the IVF pair once
+    crashed building its centroid table from zero rows."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.operators import clustering as C
+
+    df = golden_ops.empty(spark)
+    q = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])], golden_ops.SCHEMA)
+    ops = {
+        "ivf_topk_det": lambda: S.ivf_topk_det(df, q, k=5, n_centroids=3, nprobe=2),
+        "semantic_dedup": lambda: S.semantic_dedup(df, n_centroids=3),
+        "kmeans_lloyd": lambda: C.kmeans_lloyd(df, k=3),
+        "pq_encode": lambda: C.pq_encode(df, n_subspaces=2, n_codes=3),
+        "pq_adc_topk": lambda: C.pq_adc_topk(df, q, k=5, n_subspaces=2, n_codes=3),
+        "ivfpq_topk": lambda: C.ivfpq_topk(df, q, k=5, n_centroids=3, nprobe=2, n_subspaces=2, n_codes=3),
+        "rq_encode": lambda: C.rq_encode(df, n_codes1=3, n_codes2=3),
+    }
+    for name, fn in ops.items():
+        assert fn().collect() == [], name
