@@ -124,8 +124,11 @@ class TableEngine:
     # -- UDFs (ref: tableEnv.registerFunction, StreamingJob.java:88) --------
 
     def register_udf(self, name: str, fn: Callable, return_type) -> None:
-        """Register a row-at-a-time scalar UDF (the slow path — prefer
-        built-in functions; see functions.scalar for the fast paths)."""
+        """Register a row-at-a-time Python scalar UDF (the slow path: it runs
+        in a Python worker, outside whole-stage codegen).  Prefer a SQL
+        function over built-ins, as ``functions.scalar`` registers the
+        reference's ``TimestampToString``: the analyzer inlines its body
+        into the query's JVM plan."""
         self.spark.udf.register(name, fn, return_type)
 
     def register_pandas_udf(self, name: str, pandas_fn: Callable, return_type) -> None:

@@ -5,15 +5,13 @@ The reference defines ``TimestampToString extends ScalarFunction``
 ``java.sql.Timestamp.toString()``, registered by name and called from the
 SELECT list (StreamingJob.java:88,93).
 
-Three implementations, fastest first:
-
-1. ``timestamp_to_string_col`` — pure built-in expression (JVM-side, inside
-   whole-stage codegen).  The hot path; what the query library uses.
-2. ``register_timestamp_to_string`` — registers a *SQL-callable* function by
-   the reference's name so user SQL written against the reference
-   (``TimestampToString(o.eventtime)``) runs unchanged.
-3. ``timestamp_to_string_pandas`` — Arrow-vectorized pandas_udf, kept as the
-   template for UDFs whose logic genuinely can't be expressed with builtins.
+One implementation: :data:`TIMESTAMP_TO_STRING_SQL`, a Spark SQL body that
+:func:`register_timestamp_to_string` registers as a temporary catalog SQL
+function under the reference's name.  User SQL written against the
+reference (``TimestampToString(o.eventtime)``) runs unchanged, and the
+analyzer inlines the body into the query, so it compiles into whole-stage
+codegen with the rest of the projection — no Python worker, no Arrow
+round trip.
 
 ``java.sql.Timestamp.toString()`` format: ``yyyy-MM-dd HH:mm:ss.f…`` with
 1-9 fractional digits, trailing zeros stripped but always ≥1 digit
@@ -25,48 +23,34 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+
+#: java.sql.Timestamp.toString() over the parameter ``ts``: date_format
+#: gives micros zero-padded to 6; strip trailing zeros, and an all-zero
+#: fraction becomes '0' (Java prints '.0').  NULL in → NULL out (concat).
+TIMESTAMP_TO_STRING_SQL = (
+    "concat(date_format(ts, 'yyyy-MM-dd HH:mm:ss'), '.', "
+    "coalesce(nullif(regexp_replace(date_format(ts, 'SSSSSS'), '0+$', ''), ''), '0'))"
+)
 
 
-def timestamp_to_string_col(col: Column | str) -> Column:
-    """Built-in-expression replica of java.sql.Timestamp.toString().
-
-    date_format gives micros zero-padded to 6; strip trailing zeros, then
-    re-append '0' when the fraction was all zeros (Java prints '.0').
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    base = F.date_format(c, "yyyy-MM-dd HH:mm:ss")
-    frac = F.regexp_replace(F.date_format(c, "SSSSSS"), "0+$", "")
-    frac = F.when(frac == "", F.lit("0")).otherwise(frac)
-    return F.concat(base, F.lit("."), frac)
-
-
-def timestamp_to_string_py(ts) -> str | None:
-    """Row-at-a-time Python equivalent (slow path; used for udf parity tests)."""
-    if ts is None:
-        return None
-    s = ts.strftime("%Y-%m-%d %H:%M:%S")
-    frac = f"{ts.microsecond:06d}".rstrip("0") or "0"
-    return f"{s}.{frac}"
+def register_timestamp_to_string(spark: SparkSession) -> None:
+    """Make ``TimestampToString`` callable from SQL, as the reference does
+    with ``tableEnv.registerFunction`` (StreamingJob.java:88).  Idempotent:
+    calling it again replaces the function with the same body."""
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION TimestampToString(ts TIMESTAMP) "
+        f"RETURNS STRING RETURN {TIMESTAMP_TO_STRING_SQL}"
+    )
 
 
 def timestamp_to_string_pandas(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized variant — the pandas_udf template for custom scalars.
+    """pandas body of ``TimestampToString``, registered nowhere.
 
-    Fully vectorized body (optimization guide §4.2 — hand whole batches
-    to pandas' C paths, never loop rows in Python): the previous
-    ``s.map(timestamp_to_string_py)`` called Python ``strftime`` + string
-    formatting PER ELEMENT inside the vectorized UDF, costing 1.11 s per
-    184k-row batch; ``s.dt.strftime`` + Series string ops produce the
-    identical output in 0.50 s (A/B in OPTIMIZATION_r17.md; byte
-    equality with the row path stays pinned in tests).
-
-    SQL NULLs arrive as ``NaT`` in the datetime64 Series — and NULL
-    event times are a live input here: PERMISSIVE JSON parsing nulls out
-    malformed rows.  NaT inputs become None in an object-dtype result
-    (an all-NaT frame would otherwise keep a non-string dtype, which
-    Arrow cannot convert to string), so SQL sees NULL, matching the
-    row-at-a-time path."""
+    It remains only because the benchmark's ``functions.ts_to_string_s``
+    probe times it; it goes in the next change to the benchmark.  Its
+    output equals the registered SQL function's on every value, NaT
+    included (pinned in tests/test_engine.py): NaT inputs become None in
+    an object-dtype result."""
     base = s.dt.strftime("%Y-%m-%d %H:%M:%S")
     # java.sql.Timestamp.toString() fraction: 6-digit micros, trailing
     # zeros stripped, minimum one digit ('.0' for whole seconds)
@@ -75,16 +59,6 @@ def timestamp_to_string_pandas(s: pd.Series) -> pd.Series:
     out = (base + "." + frac).astype(object)
     out[s.isna()] = None
     return out
-
-
-def register_timestamp_to_string(spark: SparkSession, vectorized: bool = True) -> None:
-    """Make ``TimestampToString`` callable from SQL, as the reference does
-    with ``tableEnv.registerFunction`` (StreamingJob.java:88)."""
-    if vectorized:
-        fn = F.pandas_udf(timestamp_to_string_pandas, StringType())
-        spark.udf.register("TimestampToString", fn)
-    else:
-        spark.udf.register("TimestampToString", timestamp_to_string_py, StringType())
 
 
 #: DuckDB-side twin of :func:`finite_or_null` for oracle SQL (DuckDB has

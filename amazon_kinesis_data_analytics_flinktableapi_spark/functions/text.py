@@ -276,7 +276,7 @@ def nfc_normalize_col(text: Column | str) -> Column:
     ``nfc_normalize`` (utf8proc); both implement the same stable
     canonical-composition tables — three-way parity (Spark ≡ CPython ≡
     DuckDB) over the hostile unicode fixture is pinned in
-    tests/test_r17_additions.py.  At 100 TB this rides the corpus scan as
+    tests/test_text_multimodal.py.  At 100 TB this rides the corpus scan as
     one vectorized stage; typical mostly-ASCII batches normalize at
     near-memcpy speed inside the UDF."""
     c = F.col(text) if isinstance(text, str) else text

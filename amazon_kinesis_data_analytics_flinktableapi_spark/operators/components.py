@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from amazon_kinesis_data_analytics_flinktableapi_spark.operators.materialize import pin
+
 
 def _unionfind_components(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Single-pass union-find (path halving) over an edge list; emits
@@ -116,16 +118,10 @@ def connected_components(
     if max_iterations < 1:
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
 
-    def pin(df: DataFrame) -> DataFrame:
-        # reliable checkpoint() replicates to the configured checkpoint dir
-        # (survives executor loss — the cluster-mode path); localCheckpoint
-        # is executor-local and fail-loud (the local/bench default)
-        return df.checkpoint() if reliable_checkpoint else df.localCheckpoint()
-
     # materialize the edge list BEFORE anything reads it twice: the input
     # here is typically the whole near-dup pair pipeline (the expensive
     # part), and both paths below re-read it
-    e = pin(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    e = pin(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), reliable_checkpoint)
     # scalar count over the already-materialized edge list — effectively
     # free, and it picks the execution path.  ``small_graph_edges`` is
     # documented as a bound on directed edges after mirroring, so compare
@@ -154,7 +150,8 @@ def connected_components(
     # over IN-neighbors); built from the pinned list, so the pair pipeline
     # still runs once
     bidir = pin(
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
+        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct(),
+        reliable_checkpoint,
     )  # every round reads it
 
     labels = (
@@ -182,7 +179,7 @@ def connected_components(
         cur = labels
         for _ in range(steps):
             cur = step(cur.select("node", "comp"))
-        cur = pin(cur)  # one materialization per check window
+        cur = pin(cur, reliable_checkpoint)  # one materialization per check window
         # __changed reflects only the LAST lazy step: zero there means that
         # step was a fixpoint application — exact convergence, not a sample
         changed = cur.filter(F.col("__changed")).count()

@@ -18,9 +18,10 @@ item 3/next-round item 4):
   ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` for the registered queries,
   whose signatures the driver contract fixes) writes replicated blocks
   to ``spark.sparkContext.setCheckpointDir`` — survives executor loss;
-  REQUIRED setup: point the checkpoint dir at durable shared storage.
-  This mirrors ``operators/components.connected_components``'s
-  ``reliable_checkpoint`` knob, which established the pattern.
+  REQUIRED setup: point the checkpoint dir at durable shared storage
+  (without one, :func:`pin` raises ``ValueError``).
+  ``operators/components.connected_components`` passes its
+  ``reliable_checkpoint`` argument through the same call.
 
 Default mode is byte-identical to the pre-knob behavior (same
 ``localCheckpoint`` call, same plans); the env flag exists so a cluster
@@ -49,7 +50,19 @@ def pin(df: DataFrame, reliable: bool | None = None) -> DataFrame:
     caller-facing signature should expose the choice as a
     ``reliable_checkpoint`` parameter and pass it through (see
     ``connected_components``).  See the module docstring for the
-    executor-loss trade each form makes."""
+    executor-loss trade each form makes.
+
+    Raises ``ValueError`` when the reliable form is asked for and no
+    checkpoint directory is set."""
     if reliable is None:
         reliable = reliable_default()
-    return df.checkpoint() if reliable else df.localCheckpoint()
+    if not reliable:
+        return df.localCheckpoint()
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        raise ValueError(
+            "reliable checkpoint requested but no checkpoint directory is "
+            "set: call SparkContext.setCheckpointDir(<durable shared path>) "
+            f"first, or use localCheckpoint() (unset {_ENV}, pass "
+            "reliable=False)"
+        )
+    return df.checkpoint()

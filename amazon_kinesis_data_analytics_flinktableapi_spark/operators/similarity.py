@@ -272,44 +272,19 @@ def quantized(vec_col: str | "F.Column") -> "F.Column":
     return F.transform(as_double(vec_col), lambda x: F.floor(x * NEARDUP_QUANT))
 
 
-def quantized_sketch(qv_col: str, planes: list[list[int]]) -> "F.Column":
-    """Sign-bit sketch of a quantized vector column against integer planes.
-
-    Every product and partial sum is an integer < 2⁵³ — exactly
-    representable in a double — so ANY engine computing the same dot gets
-    the identical sign bits (see ``neardup_lsh_planes``)."""
-    bits = []
-    for i, p in enumerate(planes):
-        # ONE py4j call per plane: building this as
-        # F.array(*[F.lit(c).cast("long") ...]) costs dim×2 gateway
-        # round-trips per plane — 4096 literals ≈ 12 s of pure Python
-        # plan construction before Spark even sees the query
-        coeffs = F.expr("array(" + ",".join(f"{c}L" for c in p) + ")")
-        d = F.aggregate(
-            F.zip_with(F.col(qv_col), coeffs, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
-        bits.append(F.when(d >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def quantized_sketches_all(qv_col: str, tables: list[list[list[int]]]) -> "F.Column":
     """All per-table sign-bit sketches of a quantized vector in ONE Arrow
-    batch: array<bigint> of length n_tables, element t == the value
-    ``quantized_sketch(qv, tables[t])`` would compute.
+    batch: array<bigint> of length n_tables, element t has bit i set iff
+    ``qv · tables[t][i] >= 0``; a NULL vector yields a NULL sketch array.
 
-    Semantics are identical to n_tables × n_planes ``quantized_sketch``
-    dots — the matmul is pure int64 arithmetic (|q| ≤ ~10⁶·|x|, |coeff| ≤
+    The matmul is pure int64 arithmetic (|q| ≤ ~10⁶·|x|, |coeff| ≤
     ~4·scale ⇒ |dot| < 2⁴², no overflow), so the sign bits are
-    bit-identical on any engine, same as the HOF form.  Why it exists:
-    ``aggregate(zip_with(...))`` is an interpreted expression — at
-    n_tables × n_planes dots per row it is the dominant cost of the LSH
-    pipeline (measured 5.3 s of an 8 s query at sf0.1); one numpy matmul
-    per Arrow batch is ~100× cheaper and keeps the work off the driver.
+    bit-identical on any engine (see ``neardup_lsh_planes``).  One numpy
+    matmul per Arrow batch replaced a per-plane interpreted
+    ``aggregate(zip_with(...))`` expression that was the dominant cost of
+    the LSH pipeline (measured 5.3 s of an 8 s query at sf0.1); golden
+    rows recorded from that expression are pinned in
+    tests/test_similarity.py.
     """
     from pyspark.sql.types import ArrayType, LongType
 
@@ -321,9 +296,9 @@ def quantized_sketches_all(qv_col: str, tables: list[list[list[int]]]) -> "F.Col
 
     @F.pandas_udf(ArrayType(LongType()))
     def _sketches(qv: pd.Series) -> pd.Series:
-        # NULL embeddings must yield NULL sketches (the HOF form's
-        # semantics) — np.stack over a batch containing None would kill
-        # the whole task instead of skipping the row
+        # NULL embeddings must yield NULL sketches — np.stack over a
+        # batch containing None would kill the whole task instead of
+        # skipping the row
         vals = qv.to_numpy()
         mask = np.array([v is not None for v in vals])
         out = np.empty(len(vals), dtype=object)
@@ -381,15 +356,13 @@ def lsh_topk_det(
 
     def sketched(df: DataFrame, prefix: str) -> DataFrame:
         # All n_tables sketches from ONE Arrow matmul per row batch
-        # (``quantized_sketches_all`` — the neardup_pairs_lsh pattern):
-        # the previous per-plane ``quantized_sketch`` HOF forest is an
-        # interpreted expression and was this operator's dominant cost
-        # (measured ~3 s of a 6 s ann_lsh_topk at sf0.01 for 500 vectors).
-        # NULL qv: the HOF form emitted sketch 0 for every table (the
-        # aggregate over a NULL zip is NULL, so each when() fell through
-        # to its otherwise-0), while posexplode of a NULL array would
-        # DROP the row — coalesce to the all-zeros sketch array keeps the
-        # bucket placement bit-identical.
+        # (``quantized_sketches_all`` — the neardup_pairs_lsh pattern);
+        # the per-plane interpreted expression it replaced was this
+        # operator's dominant cost (measured ~3 s of a 6 s ann_lsh_topk
+        # at sf0.01 for 500 vectors).  NULL qv is bucketed at sketch 0 in
+        # every table, the placement the expression form gave it:
+        # posexplode of a NULL array would DROP the row, so coalesce to
+        # the all-zeros sketch array.
         zeros = F.array(*[F.lit(0).cast("long") for _ in tables])
         return df.select(
             f"{prefix}_id",

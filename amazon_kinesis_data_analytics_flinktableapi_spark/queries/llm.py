@@ -3194,7 +3194,7 @@ def zipf_fit_over(docs: DataFrame) -> DataFrame:
 def q_unicode_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched pandas-UDF normalization (Spark has no built-in NFC);
     the oracle's nfc_normalize is utf8proc — same UAX #15 tables as
-    CPython's unicodedata, parity pinned in tests/test_r17_additions.py.
+    CPython's unicodedata, parity pinned in tests/test_text_multimodal.py.
     The UDF output is aliased ONCE in a projection and referenced
     downstream so ArrowEvalPython materializes a single normalization
     pass, not one per referencing expression."""

@@ -433,17 +433,6 @@ class _Opts:
         #: KinesisClient (boto3 wire shape) — the contract-tested seam a
         #: real AWS backend plugs into (see sources/kinesis_client.py)
         self.client_mode = options.get("client_mode", "generator")
-        #: arrow=true switches batch reads to pyarrow RecordBatch yields
-        #: (Spark 4's Arrow IPC Python Data Source path).  Measured on
-        #: this connector it is NOT faster — the records are 5 small
-        #: scalar fields, and PySpark's batched-cPickle tuple transport
-        #: edges Arrow at both 200k and 2M-record scans (1.36M vs 1.09M
-        #: rec/s at 2M after the r12 generator tuning) because the Arrow
-        #: win (column-wise zero-copy) is eaten by assembling Python
-        #: objects into arrays in the worker.  Kept as an option with
-        #: row-parity pinned: for WIDE or binary-heavy schemas the
-        #: balance flips, and the transport seam is the point.
-        self.arrow_batches = str(options.get("arrow", "false")).lower() == "true"
         #: which registered client factory "sdk" mode builds on the executor
         self.client = options.get("client", "fake_sdk")
         self.stream_name = options.get("stream_name", "kinesis-sim")
@@ -523,54 +512,6 @@ class _Opts:
         return 0
 
 
-#: rows per Arrow RecordBatch on the batch-read path — large enough to
-#: amortize the per-batch IPC/conversion overhead, small enough that a
-#: batch (~1 MB at ~130 B/record) never strains worker memory
-_ARROW_CHUNK = 8192
-
-
-def _arrow_batches(records: Iterator[tuple]) -> Iterator:
-    """Chunk the connector's (shard_id, seq, partition_key, data,
-    arrival_ts) tuples into pyarrow RecordBatches.
-
-    Spark 4's Python Data Source API accepts ``Iterator[RecordBatch]``
-    from ``read()`` and moves them to the JVM over Arrow IPC — no
-    per-tuple pickling.  On THIS schema (5 small scalar fields) the
-    measured balance favors the default tuple path (see the ``arrow``
-    option in ``_Opts``); the Arrow route exists for wide/binary-heavy
-    schema variants and as the pinned-parity transport seam.  Record
-    CONTENT is identical to the tuple path — same generator, same
-    ordering — only the transport changes.
-    """
-    import pyarrow as pa
-
-    schema = pa.schema(
-        [
-            ("shard_id", pa.string()),
-            ("sequence_number", pa.int64()),
-            ("partition_key", pa.string()),
-            ("data", pa.string()),
-            # tz-aware micros, matching Spark's TimestampType in the UTC
-            # session the engine pins
-            ("arrival_ts", pa.timestamp("us", tz="UTC")),
-        ]
-    )
-    buf: list[tuple] = []
-    for rec in records:
-        buf.append(rec)
-        if len(buf) >= _ARROW_CHUNK:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(col, type=f.type) for col, f in zip(zip(*buf), schema)],
-                schema=schema,
-            )
-            buf.clear()
-    if buf:
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(col, type=f.type) for col, f in zip(zip(*buf), schema)],
-            schema=schema,
-        )
-
-
 class _ShardPartition(InputPartition):
     def __init__(self, shard: int, start: int, end: int):
         self.shard = shard
@@ -597,17 +538,7 @@ class KinesisSimBatchReader(DataSourceReader):
             for t in o.topology()
         ]
 
-    def read(self, partition: _ShardPartition) -> Iterator:
-        o = self.opts
-        if o.arrow_batches:
-            # opt-in Arrow transport (see _arrow_batches); content
-            # identical to the tuple path — parity pinned in
-            # test_kinesis_sim
-            yield from _arrow_batches(self._tuples(partition))
-            return
-        yield from self._tuples(partition)
-
-    def _tuples(self, partition: _ShardPartition) -> Iterator[tuple]:
+    def read(self, partition: _ShardPartition) -> Iterator[tuple]:
         o = self.opts
         if o.client_mode == "sdk":
             # the contract-tested seam: identical tuples, acquired through

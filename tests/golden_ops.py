@@ -1,13 +1,14 @@
 """Golden-row fixtures for the codebook operators (IVF, semantic dedup,
-k-means, PQ, ADC, IVF-PQ, RQ).
+k-means, PQ, ADC, IVF-PQ, RQ) and the deterministic LSH sketch.
 
 The expected rows in ``tests/data/golden_ops.json`` were recorded from
 the implementation that still carried an expression twin next to each
-Arrow kernel (the per-centroid expression forest at <= 4 IVF lists, and
-the crossJoin + row_number fallback for ragged or NULL-element
-codebooks).  The tests assert that the single kernel path reproduces
-those rows exactly, so the twins stay deleted without losing the edge
-semantics they defined.
+Arrow kernel (the per-centroid expression forest at <= 4 IVF lists, the
+crossJoin + row_number fallback for ragged or NULL-element codebooks,
+and the per-plane ``aggregate(zip_with(...))`` sign-bit sketch).  The
+tests assert that the single kernel path reproduces those rows exactly,
+so the twins stay deleted without losing the edge semantics they
+defined.
 
 Regenerate (only when a deliberate semantic change is made)::
 
@@ -84,12 +85,20 @@ def empty(spark):
     return spark.createDataFrame([], SCHEMA)
 
 
+def lsh_small(spark):
+    """40 small-integer-grid vectors plus one NULL vector (id 99)."""
+    rows = [(i, [((i * 7 + j * 3) % 11 - 5) / 4.0 for j in range(8)]) for i in range(40)]
+    rows.append((99, None))
+    return spark.createDataFrame(rows, "id long, embedding array<double>")
+
+
 FIXTURES = {
     "tail_hostile": tail_hostile,
     "head_hostile": head_hostile,
     "mid_hostile": mid_hostile,
     "small_clean": small_clean,
     "empty": empty,
+    "lsh_small": lsh_small,
 }
 
 
@@ -134,6 +143,25 @@ def cases() -> dict:
     return out
 
 
+def lsh_sketches(df):
+    """(id, t, sk) bucket placement of ``lsh_topk_det``'s ``sketched``:
+    every table's sketch from ``quantized_sketches_all``, a NULL vector
+    at sketch 0 in every table."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.operators import similarity as S
+
+    tables = S.neardup_lsh_planes(dim=8, n_planes=5, n_tables=3, seed=13)
+    zeros = F.array(*[F.lit(0).cast("long") for _ in tables])
+    return df.select("id", S.quantized("embedding").alias("qv")).select(
+        "id",
+        F.posexplode(F.coalesce(S.quantized_sketches_all("qv", tables), zeros)).alias("t", "sk"),
+    )
+
+
+#: {(fixture, op): operator} for the LSH sketch, kept out of ``cases()``
+#: whose entries the codebook tests parametrize over
+SKETCH_CASES = {("lsh_small", "lsh_sketches"): lsh_sketches}
+
+
 def case_id(fixture: str, op: str) -> str:
     return f"{fixture}/{op}"
 
@@ -155,7 +183,7 @@ def main(out_path: str) -> int:
     spark = build_spark(app_name="golden_ops", master="local[2]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     golden = {}
-    for (fx, op), fn in cases().items():
+    for (fx, op), fn in {**cases(), **SKETCH_CASES}.items():
         df = fn(FIXTURES[fx](spark))
         golden[case_id(fx, op)] = {"columns": df.columns, "rows": rows_of(df)}
         print(f"{case_id(fx, op)}: {len(golden[case_id(fx, op)]['rows'])} rows")

@@ -1078,48 +1078,3 @@ def test_record_byte_identity_with_reference_formulation():
                         assert _record(template, seed, shard, seq, interval_ms) == reference(
                             template, seed, shard, seq, interval_ms
                         ), (template, seed, shard, seq, interval_ms)
-
-
-def test_arrow_and_tuple_transport_row_parity(spark):
-    """arrow=true (RecordBatch transport) and the default per-tuple
-    transport must produce identical rows in both client modes — only
-    the transport differs."""
-    from amazon_kinesis_data_analytics_flinktableapi_spark.sources.kinesis_sim import register
-
-    register(spark)
-
-    def scan(**extra):
-        return (
-            spark.read.format("kinesis_sim")
-            .option("stream", "orders")
-            .option("shards", 4)
-            .option("records_per_shard", 500)
-            .options(**extra)
-            .load()
-            .orderBy("shard_id", "sequence_number")
-            .collect()
-        )
-
-    base = scan()
-    assert len(base) == 2000
-    assert scan(arrow="true") == base
-    assert scan(arrow="true", client_mode="sdk") == base
-    assert scan(client_mode="sdk") == base
-
-
-def test_arrow_batches_empty_and_chunk_boundaries():
-    """_arrow_batches: empty iterator yields no batches; chunking splits
-    exactly at _ARROW_CHUNK and preserves order/content."""
-    from amazon_kinesis_data_analytics_flinktableapi_spark.sources.kinesis_sim import (
-        _ARROW_CHUNK,
-        _arrow_batches,
-        _record,
-    )
-
-    assert list(_arrow_batches(iter([]))) == []
-    n = _ARROW_CHUNK + 3
-    recs = [_record("orders", 42, 0, q, 10) for q in range(n)]
-    batches = list(_arrow_batches(iter(recs)))
-    assert [b.num_rows for b in batches] == [_ARROW_CHUNK, 3]
-    seqs = [v.as_py() for b in batches for v in b.column("sequence_number")]
-    assert seqs == list(range(n))

@@ -1,17 +1,18 @@
-"""Straight-line Python reference checks for the r15 report queries —
-the two-sided strategy (SQL oracle proves ENGINE parity; these prove
-the distributed computation equals an independent from-the-definition
-evaluation): exact TVD drift, RRF fusion, and the MinHash band-sweep's
-planted-recall accounting."""
+"""Report queries of ``queries/llm.py`` and ``queries/mining.py`` checked
+against straight-line Python computed from the definition — the
+two-sided strategy (the SQL oracle proves ENGINE parity; these prove the
+distributed computation equals an independent evaluation): exact TVD
+drift, RRF fusion, the MinHash band-sweep's planted-recall accounting,
+and the Zipf fit on synthetic corpora whose slope is known exactly."""
 
 from __future__ import annotations
 
 import math
-import re
 from collections import Counter, defaultdict
 
 import pandas as pd
 import pyarrow.parquet as papq
+from pyspark.sql import Row
 
 from amazon_kinesis_data_analytics_flinktableapi_spark.queries import REGISTRY
 from tests.conftest import SF_SMOKE
@@ -122,3 +123,53 @@ def test_band_sweep_recall_monotone_in_bands(spark):
         "8-row bands are strictly harder to collide than 4-row bands over "
         "the same 64 permutations"
     )
+
+
+def test_zipf_slope_on_exact_zipf_corpus(spark):
+    """A corpus whose type frequencies are EXACTLY f(r) = 840/r has
+    ln f = ln 840 − 1·ln r: slope −1, intercept ln 840, r² = 1 (up to
+    the 6-dp rounding the report applies).  840 = lcm(1..8), so every
+    frequency is an exact integer — a 1000//r corpus would flooring-skew
+    the law and the fit (slope −0.9961…, caught in review)."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.queries.llm import zipf_fit_over
+
+    rows = [
+        Row(source="z", text=" ".join(f"tok{r:03d}" for _ in range(840 // r)))
+        for r in range(1, 9)
+    ]
+    docs = spark.createDataFrame(rows)
+    out = zipf_fit_over(docs).collect()
+    assert len(out) == 1
+    rep = out[0]
+    assert rep["n_types"] == 8
+    assert abs(rep["zipf_slope"] - (-1.0)) < 1e-6
+    assert abs(rep["zipf_intercept"] - math.log(840.0)) < 1e-6
+    assert abs(rep["zipf_r2"] - 1.0) < 1e-6
+
+
+def test_zipf_degenerate_uniform_frequencies_null_r2(spark):
+    """All type frequencies equal (every token unique ⇒ f ≡ 1) makes the
+    fit undefined: ln f is constant, so r² is reported NULL — by the
+    explicit min(f) = max(f) guard, which is integer-exact on both
+    engines, NOT a var_pop() == 0.0 float comparison.  Slope is 0 (the
+    flat line is a valid least-squares answer)."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.queries.llm import zipf_fit_over
+
+    docs = spark.createDataFrame([Row(source="u", text="a b c d e f g h")])
+    rep = zipf_fit_over(docs).collect()[0]
+    assert rep["n_types"] == 8
+    assert rep["zipf_slope"] == 0.0
+    assert rep["zipf_r2"] is None
+
+
+def test_zipf_single_type_source_dropped(spark):
+    """A source with one distinct type has one (rank, freq) point — no
+    regression exists; the report drops it (n_types >= 2) rather than
+    emitting engine-dependent NULL-vs-NaN edge values."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.queries.llm import zipf_fit_over
+
+    docs = spark.createDataFrame(
+        [Row(source="one", text="same same same"), Row(source="two", text="x y x")]
+    )
+    out = {r["source"] for r in zipf_fit_over(docs).collect()}
+    assert out == {"two"}

@@ -485,7 +485,7 @@ BNLJ_SCALAR_CROSS = {
     # still exist but now execute BEFORE an eager localCheckpoint that
     # scopes the query's caches (ADVICE r15), so the returned plan is the
     # 3-row checkpointed frame and the sweep no longer sees the BNLJ —
-    # its shape remains pinned by tests/test_r15_reports.py
+    # its shape remains pinned by tests/test_llm_reports.py
     "ivfpq_recall_report",      # composes brute_topk for its exact arm —
                                 # the bounded query-vector cross (its
                                 # ivfpq approx arm lost its BNLJs in r18)

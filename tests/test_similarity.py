@@ -387,6 +387,22 @@ def test_ivf_golden_rows(spark, fixture, op):
     assert golden_ops.rows_of(df) == want["rows"]
 
 
+def test_lsh_sketch_golden_rows(spark):
+    """``lsh_topk_det``'s (id, t, sk) bucket placement — one Arrow matmul
+    per batch (``quantized_sketches_all`` + posexplode) — reproduces the
+    rows the per-plane interpreted sketch expression produced, for every
+    row INCLUDING a NULL vector, which that expression bucketed at sketch
+    0 per table (posexplode of a NULL array would instead drop the row —
+    the coalesce in ``sketched`` preserves the placement)."""
+    fx, op = "lsh_small", "lsh_sketches"
+    df = golden_ops.SKETCH_CASES[(fx, op)](golden_ops.FIXTURES[fx](spark))
+    want = golden_ops.load_golden()[golden_ops.case_id(fx, op)]
+    got = golden_ops.rows_of(df)
+    assert df.columns == want["columns"]
+    assert got == want["rows"]
+    assert [99, 0, 0] in got  # the NULL row kept its sketch-0 placement
+
+
 def test_empty_corpus_gives_empty_result(spark):
     """Empty in → empty out for every codebook operator: the IVF pair once
     crashed building its centroid table from zero rows."""

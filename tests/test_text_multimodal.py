@@ -3,11 +3,16 @@ synthetic, so heuristic accuracy is pinned here) + multimodal plumbing."""
 
 from __future__ import annotations
 
+import unicodedata
+
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from amazon_kinesis_data_analytics_flinktableapi_spark.functions import text as T
+from amazon_kinesis_data_analytics_flinktableapi_spark.functions.text import nfc_normalize_col
 from amazon_kinesis_data_analytics_flinktableapi_spark.operators import multimodal as M
+from tests.test_adversarial_oracle import UNICODE_DOCS
 
 SAMPLES = [
     (1, "the quick brown fox jumps over the lazy dog and runs to the hills", "en"),
@@ -358,3 +363,43 @@ def test_cosine_zero_norm_is_null_not_job_abort(spark):
         ).collect()
     }
     assert got[1] is None and got[2] == 1.0
+
+
+def test_nfc_three_way_parity_on_hostile_strings(spark):
+    """Spark-side NFC (pandas UDF over CPython's unicodedata) must agree
+    byte-for-byte with BOTH reference implementations on every hostile
+    unicode fixture string: CPython itself (trivially) and DuckDB's
+    utf8proc ``nfc_normalize`` — the oracle twin.  NFD/NFC twins, zalgo
+    combining stacks, astral plane, BOM, bidi: all compose identically
+    under UAX #15 canonical composition."""
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(UNICODE_DOCS)], ["i", "text"]
+    )
+    got = {
+        r["i"]: r["nfc"]
+        for r in df.select("i", nfc_normalize_col("text").alias("nfc")).collect()
+    }
+    con = duckdb.connect()
+    for i, t in enumerate(UNICODE_DOCS):
+        py = unicodedata.normalize("NFC", t)
+        duck = con.execute("SELECT nfc_normalize(?)", [t]).fetchone()[0]
+        assert got[i] == py, f"spark != cpython on {t!r}"
+        assert py == duck, f"cpython != duckdb on {t!r}"
+    con.close()
+
+
+def test_nfc_null_and_composition(spark):
+    """NULL in → NULL out; an NFD string actually composes (changes)."""
+    nfd = "café"  # e + combining acute
+    df = spark.createDataFrame([(1, nfd), (2, None), (3, "plain")], ["i", "text"])
+    rows = {
+        r["i"]: (r["nfc"], r["changed"])
+        for r in df.select(
+            "i",
+            nfc_normalize_col("text").alias("nfc"),
+            (~F.col("text").eqNullSafe(nfc_normalize_col("text"))).alias("changed"),
+        ).collect()
+    }
+    assert rows[1] == ("caf\xe9", True)
+    assert rows[2] == (None, False)
+    assert rows[3] == ("plain", False)
